@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, register_views
-from ..functions.money import money_sum, money_sum_sql
+from ..functions.money import DECIMAL_T, money_sum, money_sum_sql
 from ..registry import query
 
 _Q1_ORACLE = """
@@ -73,13 +73,20 @@ GROUP BY c_mktsegment
 def q_agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """count / countDistinct / sum / avg / min / max in one pass.
     countDistinct expands to a two-phase aggregate (expand + merge) —
-    still a single logical pass, no driver involvement."""
+    still a single logical pass, no driver involvement.
+
+    The mean is taken in exact decimal (functions/money.py): a 2-dp
+    mean can sit exactly on a 4-dp rounding tie (FURNITURE at sf0.001:
+    4190.83825), and a double avg lands an ulp either side of it
+    depending on summation order, so the rounded value would flip."""
     c = load_table(spark, sf_dir, "customer")
     return c.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n_customers"),
         F.countDistinct("c_nationkey").alias("n_nations"),
         F.round(F.sum("c_acctbal"), 2).alias("sum_bal"),
-        F.round(F.avg("c_acctbal"), 4).alias("avg_bal"),
+        F.round(F.avg(F.col("c_acctbal").cast(DECIMAL_T)), 4)
+        .cast("double")
+        .alias("avg_bal"),
         F.round(F.min("c_acctbal"), 2).alias("min_bal"),
         F.round(F.max("c_acctbal"), 2).alias("max_bal"),
     )

@@ -191,9 +191,18 @@ def run_stream_to_memory(
     measured at sf0.1: stream-stream join 19.3 s at 32 partitions vs
     5.1 s at 8 vs 2.7 s at 4; every streaming query in the bench got
     faster 8→4 (r06 sweep: tumbling 1.6→1.0, incremental rollup
-    2.7→2.3). Default 4 here is a local-mode runtime knob (callers
-    override); on a real cluster partitions scale with executors and
-    state size, not this default."""
+    2.7→2.3). Default 4 here is a local-mode runtime knob; on a real
+    cluster partitions scale with executors and state size, not this
+    default.
+
+    Callers that pick their own count do so because their per-partition
+    cost differs: the transformWithState family passes
+    ``stateful.tws_partitions`` (the session's task slots, capped at
+    16 — one task wave, since its per-key state-server round trips
+    parallelize only up to the slot count); the applyInPandasWithState
+    queries pass 8; the state_reader queries pass fixed counts (4, 8,
+    and 16 for the re-shard), since the shard count recorded in the
+    checkpoint's state metadata is part of what some of them check."""
     spark = stream_df.sparkSession
     # Stateful streaming is the op most sensitive to stale broadcast/
     # shuffle state: ContextCleaner only purges on GC, and after a long

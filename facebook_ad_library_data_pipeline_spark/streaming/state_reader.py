@@ -631,6 +631,8 @@ def q_state_reshard(spark: SparkSession, sf_dir: str) -> DataFrame:
         out,
         "state_reshard_out",
         output_mode="update",
+        # fixed, not tws_partitions: the 8 -> 16 re-shard is what this
+        # query checks (n_shards_new in the oracle)
         partitions="16",
         checkpoint_location=new_ckpt,
     )

@@ -588,11 +588,12 @@ def _tws_scoped_session(spark: SparkSession) -> SparkSession:
         # (snapshots move to the background maintenance task). Measured
         # per-batch with scripts/tws_commit_metrics.py at sf0.1: warm
         # batches drop from ckptLat 300-2000ms / flushLat 100-700ms /
-        # syncMs 4-30s (summed over 16 partition commits) to ckptLat 0 /
-        # flushLat 0 / syncMs 0.8-2s — ~10x less commit work per batch
-        # on every tws query probed. This is also the production
-        # posture for state-heavy streams (snapshot upload off the
-        # per-batch critical path). Env override for A/B re-measure.
+        # syncMs 4-30s (summed over the 16 partition commits the family
+        # then ran with) to ckptLat 0 / flushLat 0 / syncMs 0.8-2s —
+        # ~10x less commit work per batch on every tws query probed.
+        # This is also the production posture for state-heavy streams
+        # (snapshot upload off the per-batch critical path). Env
+        # override for A/B re-measure.
         scoped.conf.set(
             "spark.sql.streaming.stateStore.rocksdb."
             "changelogCheckpointing.enabled",
@@ -631,6 +632,22 @@ def _snap_sink(scoped: SparkSession, name: str) -> DataFrame:
     return snap
 
 
+_TWS_MAX_PARTITIONS = 16
+
+
+def tws_partitions(spark: SparkSession) -> str:
+    """Shuffle-partition count for a typed-state stream: one task wave.
+
+    Every tws partition is one task per micro-batch, and each task pays
+    a Python-worker init, a RocksDB store load and a commit. A wave
+    runs at most defaultParallelism tasks at once, so partitions past
+    the slot count add that fixed cost without adding state-server
+    concurrency. The cap of 16 keeps the count the local[32] sweeps
+    tuned; on local[4] this gives 4."""
+    slots = spark.sparkContext.defaultParallelism
+    return str(min(slots, _TWS_MAX_PARTITIONS))
+
+
 def q_stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user engagement via transformWithStateInPandas — the Spark 4
     typed-state successor API (named ValueState + MapState variables,
@@ -649,17 +666,17 @@ def q_stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame
     scoped = _tws_scoped_session(spark)
     events = load_events_stream(scoped, sf_dir)
     out = user_engagement_tws(events)
-    # 16 partitions for the WHOLE tws family: unlike the built-in
-    # streaming aggs (store fixed cost dominates ⇒ fewer is faster,
-    # see run_stream_to_memory), tws cost is per-KEY protocol
-    # round-trips to the state server, which parallelize across
-    # partitions. Measured family total at sf0.1 (same session,
-    # 6 queries): 4p=72s*, 8p=63/56s, 16p=53/53s, 32p=72s — 16 is the
-    # knee where round-trip parallelism still beats per-partition
-    # store+worker fixed cost on local[32]. (*4p from an earlier
-    # sweep, same protocol.)
+    # One task wave for the WHOLE tws family (see tws_partitions).
+    # Measured on a 4-vCPU VM (local[4], sf0.01, perfbench stream_state,
+    # 10 alternating pairs): 16 -> 4 partitions took the warm pass from
+    # a median 7.7 s to 5.0 s; in the traced warm pass tasks fell
+    # 35 -> 23 and summed state-store commit time 4.2-4.6 -> 1.3-1.5 s.
+    # The cap of 16 is the knee the local[32] sweeps found at sf0.1.
     run_stream_to_memory(
-        out, "stream_tws_out", output_mode="update", partitions="16"
+        out,
+        "stream_tws_out",
+        output_mode="update",
+        partitions=tws_partitions(scoped),
     )
     latest = _snap_sink(scoped, "stream_tws_out")
     return keep_latest_per_user(latest)
@@ -802,7 +819,7 @@ def q_stream_tws_list_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
         out,
         "stream_tws_list_out",
         output_mode="update",
-        partitions="16",
+        partitions=tws_partitions(scoped),
         drained=all_rows_folded,
     )
     latest = _snap_sink(scoped, "stream_tws_list_out")
@@ -937,7 +954,7 @@ def q_stream_tws_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
         out,
         "stream_tws_timer_out",
         output_mode="update",
-        partitions="16",
+        partitions=tws_partitions(scoped),
         drained=all_rows_finalized,
     )
     latest = _snap_sink(scoped, "stream_tws_timer_out")
@@ -1146,7 +1163,7 @@ def q_stream_tws_event_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
         out,
         "stream_tws_event_timer_out",
         output_mode="update",
-        partitions="16",
+        partitions=tws_partitions(scoped),
         drained=all_windows_closed,
     )
     # each window fires exactly once, so this grouping is a no-op on a
@@ -1286,7 +1303,10 @@ def q_stream_tws_initial_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         initialState=backfill,
     )
     run_stream_to_memory(
-        out, "stream_tws_init_out", output_mode="update", partitions="16"
+        out,
+        "stream_tws_init_out",
+        output_mode="update",
+        partitions=tws_partitions(scoped),
     )
     latest = _snap_sink(scoped, "stream_tws_init_out")
     return keep_latest_per_user(latest)
@@ -1453,7 +1473,10 @@ def q_stream_tws_map_spill(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = user_spill_map_tws(events)
     run_stream_to_memory(
-        out, "stream_tws_spill_out", output_mode="update", partitions="16"
+        out,
+        "stream_tws_spill_out",
+        output_mode="update",
+        partitions=tws_partitions(scoped),
     )
     latest = _snap_sink(scoped, "stream_tws_spill_out")
     return keep_latest_per_user(latest)
@@ -1641,7 +1664,10 @@ def q_stream_tws_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = bounded_reservoir_tws(events)
     run_stream_to_memory(
-        out, "stream_tws_res_out", output_mode="update", partitions="16"
+        out,
+        "stream_tws_res_out",
+        output_mode="update",
+        partitions=tws_partitions(scoped),
     )
     latest = _snap_sink(scoped, "stream_tws_res_out")
     return keep_latest_per_user(latest)

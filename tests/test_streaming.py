@@ -368,6 +368,20 @@ def test_tws_live_runtime_matches_batch(spark, sf_dir):
             assert g[f"n_{t}"] == w[f"n_{t}"], (w["user_id"], t)
 
 
+def test_tws_partitions_one_wave_capped_at_16():
+    """The typed-state family runs one task wave: as many shuffle
+    partitions as the session has task slots, never more than 16."""
+    from types import SimpleNamespace
+
+    from facebook_ad_library_data_pipeline_spark.streaming import stateful
+
+    def session(slots):
+        return SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=slots))
+
+    got = {n: stateful.tws_partitions(session(n)) for n in (1, 4, 16, 32)}
+    assert got == {1: "1", 4: "4", 16: "16", 32: "16"}
+
+
 def test_tws_list_processor_history_is_split_invariant():
     """ValueHistoryProcessor's ListState fold: the retained history —
     and the order statistics derived from it — must be identical
