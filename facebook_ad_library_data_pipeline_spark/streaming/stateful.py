@@ -11,7 +11,6 @@ tests/test_streaming.py).
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterable
 
 from typing import TYPE_CHECKING
@@ -39,6 +38,7 @@ from pyspark.sql.types import (
 )
 
 from ..registry import query
+from ..session import env_bool
 from .events import load_events_stream, run_stream_to_memory
 
 
@@ -572,6 +572,7 @@ def _tws_scoped_session(spark: SparkSession) -> SparkSession:
     key = spark.sparkContext.applicationId
     scoped = _TWS_SESSION_CACHE.get(key)
     if scoped is None:
+        changelog = env_bool("SPARK_GRAFT_TWS_CHANGELOG", "true")
         ensure_protobuf(spark)
         scoped = spark.newSession()
         scoped.conf.set(
@@ -597,7 +598,7 @@ def _tws_scoped_session(spark: SparkSession) -> SparkSession:
         scoped.conf.set(
             "spark.sql.streaming.stateStore.rocksdb."
             "changelogCheckpointing.enabled",
-            os.environ.get("SPARK_GRAFT_TWS_CHANGELOG") or "true",
+            changelog,
         )
         _TWS_SESSION_CACHE[key] = scoped
     else:

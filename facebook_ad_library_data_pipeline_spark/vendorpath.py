@@ -16,6 +16,13 @@ importable in every process that needs it:
    typed-state runtime uses a dedicated worker module, so its factory
    spawns fresh; verified end-to-end against a session created before
    the bootstrap, including with pre-warmed pandas-UDF daemons).
+   A fresh process is not free: with ``pyspark.zip`` first on the
+   worker path, Python compiles the whole ``pyspark.sql`` import graph
+   from source in each one (no bytecode cache for zip imports; ~1.4 s
+   for the transformWithState pre-init runner that every typed-state
+   stream starts on its first micro-batch). A session launched by
+   ``session.get_spark`` hides that zip from workers, so they import
+   the installed, bytecode-cached pyspark instead (~0.4 s).
 
 A REAL protobuf installation always wins: the vendor path is appended
 only when ``google.protobuf`` is not already importable.
