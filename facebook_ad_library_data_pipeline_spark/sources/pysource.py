@@ -709,7 +709,7 @@ def q_python_datasink_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     from pathlib import Path
 
-    from ..streaming.incremental import split_events_dir_ntile
+    from ..streaming.incremental import read_slices, split_events_dir_ntile
 
     cache_key = (spark.sparkContext.applicationId, sf_dir)
     cached = _STREAM_SINK_CACHE.get(cache_key)
@@ -723,15 +723,8 @@ def q_python_datasink_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         out = run_dir / "rows"
         out.mkdir()
-        schema = spark.read.parquet(src).schema
-        ev = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-            .selectExpr(
-                "user_id",
-                "CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents",
-            )
+        ev = read_slices(spark, src).selectExpr(
+            "user_id", "CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents"
         )
         q = (
             ev.writeStream.format("synth_jsonl_stream_sink")

@@ -14,6 +14,7 @@ windows shuffle on the session key only.
 
 from __future__ import annotations
 
+import hashlib
 import tempfile
 from pathlib import Path
 
@@ -154,22 +155,52 @@ def q_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------- true streaming
 
 
+def sf_temp_dir(family: str, sf_dir: str, *tag) -> Path:
+    """``gettempdir()/<family>/<hash>[_<tag>...]``: a derived-artifact
+    dir for one sf dir, keyed on a short hash of its resolved path (as
+    session.spark_home_shim keys its shim) so two sf dirs that share a
+    basename never share artifacts."""
+    key = hashlib.sha1(str(Path(sf_dir).resolve()).encode()).hexdigest()[:12]
+    return Path(tempfile.gettempdir()) / family / "_".join([key, *map(str, tag)])
+
+
 def load_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source micro-batch stream over the events parquet, with the
     same footer-probed ts-unit handling as the batch loader
     (catalog.events_ts_unit)."""
     # The file source requires a directory; expose the single events
     # file through a symlink dir (no data copied, testdata untouched).
-    stream_dir = Path(tempfile.gettempdir()) / "spark_graft_stream" / Path(sf_dir).name
+    stream_dir = sf_temp_dir("spark_graft_stream", sf_dir)
     stream_dir.mkdir(parents=True, exist_ok=True)
     link = stream_dir / "events.parquet"
-    if not link.exists():
-        link.symlink_to(f"{sf_dir}/events.parquet")
+    if not link.is_symlink():
+        try:
+            link.symlink_to(Path(sf_dir).resolve() / "events.parquet")
+        except FileExistsError:  # another process linked it first
+            pass
     if events_ts_unit(sf_dir) == "ns":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         raw = spark.readStream.schema(_events_nanos_schema()).parquet(str(stream_dir))
         return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return spark.readStream.schema(SCHEMAS["events"]).parquet(str(stream_dir))
+
+
+def rocksdb_session(spark: SparkSession) -> SparkSession:
+    """Child session on the RocksDB state-store provider with changelog
+    checkpointing on: commits append a small changelog instead of
+    uploading a full snapshot, and the snapshot moves to the background
+    maintenance task. A child session, so a registry query never
+    mutates the caller's conf."""
+    scoped = spark.newSession()
+    scoped.conf.set(
+        "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    )
+    scoped.conf.set(
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+        "true",
+    )
+    return scoped
 
 
 def run_stream_to_memory(
@@ -196,13 +227,14 @@ def run_stream_to_memory(
     default.
 
     Callers that pick their own count do so because their per-partition
-    cost differs: the transformWithState family passes
-    ``stateful.tws_partitions`` (the session's task slots, capped at
-    16 — one task wave, since its per-key state-server round trips
-    parallelize only up to the slot count); the applyInPandasWithState
-    queries pass 8; the state_reader queries pass fixed counts (4, 8,
-    and 16 for the re-shard), since the shard count recorded in the
-    checkpoint's state metadata is part of what some of them check."""
+    cost differs: the transformWithState family runs through
+    ``stateful.run_tws``, which passes ``stateful.tws_partitions`` (the
+    session's task slots, capped at 16 — one task wave, since its
+    per-key state-server round trips parallelize only up to the slot
+    count); the applyInPandasWithState queries pass 8; the state_reader
+    queries pass fixed counts (4, 8, and 16 for the re-shard), since the
+    shard count recorded in the checkpoint's state metadata is part of
+    what some of them check."""
     spark = stream_df.sparkSession
     # Stateful streaming is the op most sensitive to stale broadcast/
     # shuffle state: ContextCleaner only purges on GC, and after a long
@@ -502,18 +534,7 @@ def q_stream_tumbling_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure configuration (session-scoped here via a child session, so a
     registry query never mutates the caller's conf), and the identical
     hash proves the swap changes durability mechanics, not results."""
-    scoped = spark.newSession()
-    scoped.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    # the changelog mode the docstring describes (and the tws family
-    # measured ~10x cheaper per-commit, scripts/tws_commit_metrics.py):
-    # commits append a changelog; snapshot upload is maintenance work
-    scoped.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true",
-    )
+    scoped = rocksdb_session(spark)
     events = load_events_stream(scoped, sf_dir).withWatermark("ts", "1 hour")
     agg = tumbling_counts(events)
     run_stream_to_memory(agg, "stream_tumbling_rocksdb_out")

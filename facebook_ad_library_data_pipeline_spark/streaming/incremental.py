@@ -1,20 +1,29 @@
-"""Incremental materialized-view maintenance: a streaming foreachBatch
-sink that appends PER-BATCH PARTIAL aggregates, with the final view
-reconstructed by merging partials — the two-level partial→merge pattern
-that lets a 100 TB daily rollup absorb new data without rescanning
-history (same algebra as the HLL/CMS partial-merge sketches, applied to
-a materialized table).
+"""Split sources, and incremental materialized-view maintenance over
+them.
 
-Unlike the other streams (single micro-batch on the bounded source),
-this one FORCES multiple micro-batches (`maxFilesPerTrigger=1` over a
-4-file copy of events), so the merge path is genuinely exercised: four
-partial files land, and the merged view must equal the batch rollup —
-which is exactly what the DuckDB oracle checks. All money flows as
-integer cents, so partial merging is order-independent.
+Split sources: events re-written as N_SOURCE_FILES files (round-robin,
+exact ntile, or ts-ordered with a sentinel row) and streamed one file
+per micro-batch by ``read_slices``. They feed every multi-micro-batch
+stream in the package: most of the keyed-state family (stateful.py),
+the state-store readers (state_reader.py), the two views below,
+q_stream_observe and q_python_datasink_stream. The events-file streams
+of events.py and joins.py run as one micro-batch on the bounded source.
+
+View maintenance: a streaming foreachBatch sink that appends PER-BATCH
+PARTIAL aggregates, with the final view reconstructed by merging
+partials — the two-level partial→merge pattern that lets a 100 TB
+daily rollup absorb new data without rescanning history (same algebra
+as the HLL/CMS partial-merge sketches, applied to a materialized
+table). Four partial files land, and the merged view must equal the
+batch rollup — which is exactly what the DuckDB oracle checks. All
+money flows as integer cents, so partial merging is
+order-independent.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
 import tempfile
 import uuid
 from pathlib import Path
@@ -24,30 +33,60 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import query
+from .events import sf_temp_dir
 
 N_SOURCE_FILES = 4
 
-_SPLIT_CACHE: dict[tuple[str, str], str] = {}
+_SPLIT_CACHE: dict[tuple[str, str, str], str] = {}
+
+
+def _split_dir(spark: SparkSession, sf_dir: str, family: str, marker: str, build) -> str:
+    """The one path/marker/cache protocol of the split-dir builders:
+    the dir is ``sf_temp_dir(family, sf_dir, <events mtime>)`` (a
+    rewritten events file gets a new dir), reused across sessions once
+    ``marker`` exists in it, and cached per (app, sf_dir, family).
+    ``build(out, src_mtime)`` writes the slices and the marker."""
+    key = (spark.sparkContext.applicationId, sf_dir, family)
+    out = _SPLIT_CACHE.get(key)
+    if out is None:
+        src_mtime = int(Path(f"{sf_dir}/events.parquet").stat().st_mtime)
+        out = str(sf_temp_dir(family, sf_dir, src_mtime))
+        if not Path(out, marker).exists():
+            build(out, src_mtime)
+        _SPLIT_CACHE[key] = out
+    return out
+
+
+def read_slices(spark: SparkSession, src: str, files: str | None = None) -> DataFrame:
+    """Stream a split dir one file per micro-batch (files are admitted
+    in (mtime, path) order), with the schema read from the dir itself.
+    ``files`` is an optional glob under ``src``."""
+    schema = spark.read.parquet(src).schema
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(f"{src}/{files}" if files else src)
+    )
+
+
+def _move_single_part(part_dir: Path, dest: Path) -> None:
+    """Move the one part file of a coalesce(1) write to ``dest`` and
+    drop the write's dir."""
+    (src_file,) = part_dir.glob("part-*.parquet")
+    os.replace(src_file, dest)
+    shutil.rmtree(part_dir, ignore_errors=True)
 
 
 def split_events_dir(spark: SparkSession, sf_dir: str) -> str:
     """events re-written as N files (once per session, mtime-stamped),
-    so maxFilesPerTrigger=1 yields N real micro-batches."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    out = _SPLIT_CACHE.get(key)
-    if out is None:
-        src_mtime = int(Path(f"{sf_dir}/events.parquet").stat().st_mtime)
-        out = str(
-            Path(tempfile.gettempdir())
-            / "spark_graft_split"
-            / f"{Path(sf_dir).name}_{src_mtime}"
-        )
-        if not Path(out, "_SUCCESS").exists():
-            load_table(spark, sf_dir, "events").repartition(N_SOURCE_FILES).write.mode(
-                "overwrite"
-            ).parquet(out)
-        _SPLIT_CACHE[key] = out
-    return out
+    so read_slices yields N real micro-batches."""
+
+    def build(out: str, src_mtime: int) -> None:
+        load_table(spark, sf_dir, "events").repartition(N_SOURCE_FILES).write.mode(
+            "overwrite"
+        ).parquet(out)
+
+    return _split_dir(spark, sf_dir, "spark_graft_split", "_SUCCESS", build)
 
 
 SENTINEL_USER_ID = -1
@@ -62,46 +101,32 @@ def split_events_dir_ntile(spark: SparkSession, sf_dir: str) -> str:
     change-feed oracle needs (which batch touched which group), where
     the range-partitioned variant above is NOT replayable in SQL
     (Spark picks sampled range boundaries)."""
-    import os
 
-    key = (spark.sparkContext.applicationId, sf_dir, "ntile")
-    out = _SPLIT_CACHE.get(key)
-    if out is None:
-        src_mtime = int(Path(f"{sf_dir}/events.parquet").stat().st_mtime)
-        out = str(
-            Path(tempfile.gettempdir())
-            / "spark_graft_split_ntile"
-            / f"{Path(sf_dir).name}_{src_mtime}"
+    def build(out: str, src_mtime: int) -> None:
+        from pyspark.sql import Window
+
+        events = load_table(spark, sf_dir, "events").withColumn(
+            "__slice",
+            F.ntile(N_SOURCE_FILES).over(Window.orderBy("ts", "event_id")),
         )
-        if not Path(out, "_DONE").exists():
-            from pyspark.sql import Window
-
-            events = load_table(spark, sf_dir, "events").withColumn(
-                "__slice",
-                F.ntile(N_SOURCE_FILES).over(Window.orderBy("ts", "event_id")),
+        events.persist()
+        Path(out).mkdir(parents=True, exist_ok=True)
+        for i in range(1, N_SOURCE_FILES + 1):
+            part = Path(out) / f"__part_{i:02d}"
+            (
+                events.filter(F.col("__slice") == i)
+                .drop("__slice")
+                .coalesce(1)
+                .write.mode("overwrite")
+                .parquet(str(part))
             )
-            events.persist()
-            Path(out).mkdir(parents=True, exist_ok=True)
-            for i in range(1, N_SOURCE_FILES + 1):
-                part = Path(out) / f"__part_{i:02d}"
-                (
-                    events.filter(F.col("__slice") == i)
-                    .drop("__slice")
-                    .coalesce(1)
-                    .write.mode("overwrite")
-                    .parquet(str(part))
-                )
-                (src_file,) = list(part.glob("part-*.parquet"))
-                dest = Path(out) / f"slice-{i:02d}.parquet"
-                os.replace(src_file, dest)
-                os.utime(dest, (src_mtime + i, src_mtime + i))
-                import shutil
+            dest = Path(out) / f"slice-{i:02d}.parquet"
+            _move_single_part(part, dest)
+            os.utime(dest, (src_mtime + i, src_mtime + i))
+        events.unpersist()
+        (Path(out) / "_DONE").touch()
 
-                shutil.rmtree(part, ignore_errors=True)
-            events.unpersist()
-            (Path(out) / "_DONE").touch()
-        _SPLIT_CACHE[key] = out
-    return out
+    return _split_dir(spark, sf_dir, "spark_graft_split_ntile", "_DONE", build)
 
 
 def split_events_dir_ts_ordered(spark: SparkSession, sf_dir: str) -> str:
@@ -122,63 +147,47 @@ def split_events_dir_ts_ordered(spark: SparkSession, sf_dir: str) -> str:
     range partition i lands in lexicographically-ordered part-0000i
     files AND gets an explicitly bumped mtime, so consumption order ==
     ts order on both keys."""
-    import os
 
-    key = (spark.sparkContext.applicationId, sf_dir, "ts-ordered")
-    out = _SPLIT_CACHE.get(key)
-    if out is None:
-        src_mtime = int(Path(f"{sf_dir}/events.parquet").stat().st_mtime)
-        out = str(
-            Path(tempfile.gettempdir())
-            / "spark_graft_split_ts"
-            / f"{Path(sf_dir).name}_{src_mtime}"
+    # _READY (not Spark's _SUCCESS) gates reuse: _SUCCESS lands after
+    # the parquet write but BEFORE the sentinel/mtime steps, so a build
+    # that died in between must not be mistaken for complete by a later
+    # session
+    def build(out: str, src_mtime: int) -> None:
+        events = load_table(spark, sf_dir, "events")
+        (
+            events.repartitionByRange(N_SOURCE_FILES, "ts")
+            .sortWithinPartitions("ts")
+            .write.mode("overwrite")
+            .parquet(out)
         )
-        # _READY (not Spark's _SUCCESS) gates reuse: _SUCCESS lands
-        # after the parquet write but BEFORE the sentinel/mtime steps,
-        # so a build that died in between must not be mistaken for
-        # complete by a later session
-        if not Path(out, "_READY").exists():
-            events = load_table(spark, sf_dir, "events")
+        # bounded scalar: single max over one small table
+        max_ts = events.agg(F.max("ts")).collect()[0][0]
+        sentinel = events.limit(1).select(
+            F.lit(-1).cast("bigint").alias("event_id"),
             (
-                events.repartitionByRange(N_SOURCE_FILES, "ts")
-                .sortWithinPartitions("ts")
-                .write.mode("overwrite")
-                .parquet(out)
-            )
-            # bounded scalar: single max over one small table
-            max_ts = events.agg(F.max("ts")).collect()[0][0]
-            sentinel = events.limit(1).select(
-                F.lit(-1).cast("bigint").alias("event_id"),
-                (
-                    F.lit(max_ts).cast("timestamp")
-                    + F.expr(f"make_interval(0, 0, 0, {SENTINEL_OFFSET_DAYS}, 12, 0, 0)")
-                ).alias("ts"),
-                F.lit(SENTINEL_USER_ID).cast("bigint").alias("user_id"),
-                F.lit("sentinel").alias("event_type"),
-                F.lit(0.0).alias("value"),
-                F.lit(None).cast("string").alias("props"),
-            )
-            tmp_sent = out + "_sentinel_tmp"
-            sentinel.coalesce(1).write.mode("overwrite").parquet(tmp_sent)
-            (src,) = [
-                p for p in Path(tmp_sent).glob("part-*.parquet")
-            ]
-            os.replace(src, Path(out) / "zz-sentinel.parquet")
-            import shutil
+                F.lit(max_ts).cast("timestamp")
+                + F.expr(f"make_interval(0, 0, 0, {SENTINEL_OFFSET_DAYS}, 12, 0, 0)")
+            ).alias("ts"),
+            F.lit(SENTINEL_USER_ID).cast("bigint").alias("user_id"),
+            F.lit("sentinel").alias("event_type"),
+            F.lit(0.0).alias("value"),
+            F.lit(None).cast("string").alias("props"),
+        )
+        tmp_sent = out + "_sentinel_tmp"
+        sentinel.coalesce(1).write.mode("overwrite").parquet(tmp_sent)
+        _move_single_part(Path(tmp_sent), Path(out) / "zz-sentinel.parquet")
+        # consumption order: bump mtimes in ts-range order
+        base = int(Path(out, "_SUCCESS").stat().st_mtime)
+        parts = sorted(Path(out).glob("part-*.parquet"))
+        for i, p in enumerate(parts):
+            os.utime(p, (base + i, base + i))
+        os.utime(
+            Path(out) / "zz-sentinel.parquet",
+            (base + len(parts) + 1, base + len(parts) + 1),
+        )
+        (Path(out) / "_READY").touch()
 
-            shutil.rmtree(tmp_sent, ignore_errors=True)
-            # consumption order: bump mtimes in ts-range order
-            base = int(Path(out, "_SUCCESS").stat().st_mtime)
-            parts = sorted(Path(out).glob("part-*.parquet"))
-            for i, p in enumerate(parts):
-                os.utime(p, (base + i, base + i))
-            os.utime(
-                Path(out) / "zz-sentinel.parquet",
-                (base + len(parts) + 1, base + len(parts) + 1),
-            )
-            (Path(out) / "_READY").touch()
-        _SPLIT_CACHE[key] = out
-    return out
+    return _split_dir(spark, sf_dir, "spark_graft_split_ts", "_READY", build)
 
 
 def _partial_rollup(batch: DataFrame) -> DataFrame:
@@ -219,12 +228,7 @@ def q_stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = split_events_dir(spark, sf_dir)
     run_dir = Path(tempfile.gettempdir()) / "spark_graft_incr" / uuid.uuid4().hex
     sink = str(run_dir / "partials")
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
+    stream = read_slices(spark, src)
 
     def append_partial(batch_df: DataFrame, epoch_id: int) -> None:
         # foreachBatch delivers AT-LEAST-once: a crash between the sink
@@ -234,8 +238,6 @@ def q_stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         _partial_rollup(batch_df).write.mode("overwrite").parquet(
             f"{sink}/epoch={epoch_id}"
         )
-
-    import shutil
 
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
@@ -344,8 +346,6 @@ def q_stream_idempotent_reload(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions would move their sums. n_days > 1 per batch is what
     makes the case non-trivial: each batch's rows interleave with
     other batches' inside the same day partitions."""
-    import shutil
-
     cache_key = (spark.sparkContext.applicationId, sf_dir)
     cached = _IDEMPOTENT_CACHE.get(cache_key)
     if cached is not None:
@@ -355,12 +355,7 @@ def q_stream_idempotent_reload(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = split_events_dir_ntile(spark, sf_dir)
     run_dir = Path(tempfile.gettempdir()) / "spark_graft_reload" / uuid.uuid4().hex
     sink = str(run_dir / "table")
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
+    stream = read_slices(spark, src)
     q = (
         stream.writeStream.foreachBatch(
             lambda bdf, bid: _write_reload_batch(bdf, bid, sink)
@@ -374,7 +369,7 @@ def q_stream_idempotent_reload(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Replay batch 2 (slice-03 under the mtime admission order):
         # same rows, same batch id, same writer — as a restarted query
         # re-delivering an uncommitted epoch would.
-        replay = spark.read.schema(schema).parquet(f"{src}/slice-03.parquet")
+        replay = spark.read.schema(stream.schema).parquet(f"{src}/slice-03.parquet")
         _write_reload_batch(replay, 2, sink)
 
         result = (

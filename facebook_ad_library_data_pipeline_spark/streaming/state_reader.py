@@ -30,14 +30,16 @@ from ..registry import query
 from .events import (
     _TUMBLING_ORACLE,
     load_events_stream,
+    rocksdb_session,
     run_stream_to_memory,
     tumbling_counts,
 )
+from .incremental import read_slices, split_events_dir_ntile
 
-# One checkpoint per (app, sf_dir): the state read must see a FINISHED
-# query's checkpoint; caching keeps the stream cost shared with repeat
-# readers in the same session.
-_CKPT_CACHE: dict[tuple[str, str], str] = {}
+# One checkpoint per (app, sf_dir, kind): the state read must see a
+# FINISHED query's checkpoint; caching keeps the stream cost shared with
+# repeat readers in the same session.
+_CKPT_CACHE: dict[tuple[str, str, str], str] = {}
 
 # Deterministic FINAL RESULTS cached as localCheckpointed DataFrames
 # (lineage cut, blocks in the block manager): q_state_reshard's
@@ -48,25 +50,40 @@ _CKPT_CACHE: dict[tuple[str, str], str] = {}
 _RESULT_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
+def _checkpoint(spark: SparkSession, sf_dir: str, kind: str, build) -> str:
+    """The checkpoint ``build(ckpt)`` writes into a fresh temp dir,
+    built once per (applicationId, sf_dir, kind) and cached. A build
+    that fails leaves neither the dir nor a cache entry: an uncached
+    partial checkpoint would orphan RocksDB state dirs across retries,
+    and the next call builds again from a clean dir."""
+    key = (spark.sparkContext.applicationId, sf_dir, kind)
+    ckpt = _CKPT_CACHE.get(key)
+    if ckpt is None:
+        ckpt = tempfile.mkdtemp(prefix=f"state_read_{kind}_ckpt_")
+        try:
+            build(ckpt)
+        except BaseException:
+            shutil.rmtree(ckpt, ignore_errors=True)
+            raise
+        _CKPT_CACHE[key] = ckpt
+    return ckpt
+
+
 def tumbling_checkpoint(spark: SparkSession, sf_dir: str) -> str:
     """Drive the tumbling-count stream to completion against an
     explicit checkpoint dir and return that dir."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    ckpt = _CKPT_CACHE.get(key)
-    if ckpt is None:
-        ckpt = tempfile.mkdtemp(prefix="state_read_ckpt_")
+
+    def build(ckpt: str) -> None:
         events = load_events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
-        agg = tumbling_counts(events)
         run_stream_to_memory(
-            agg,
+            tumbling_counts(events),
             "state_read_src",
             output_mode="complete",
             partitions="4",
             checkpoint_location=ckpt,
         )
-        _CKPT_CACHE[key] = ckpt
-    return ckpt
 
+    return _checkpoint(spark, sf_dir, "tumbling", build)
 
 
 def _project_tumbling_state(state: DataFrame, *extra) -> DataFrame:
@@ -153,34 +170,23 @@ def join_checkpoint(spark: SparkSession, sf_dir: str) -> str:
     (caught by the r09 sf0.1 sweep: 5 of 72 tail views missing). With
     ts-contiguous batches no row is ever late and the retained set is
     exactly the watermark rule."""
-    from .incremental import split_events_dir_ntile
     from .joins import view_purchase_pairs
 
-    key = (spark.sparkContext.applicationId, sf_dir, "join")
-    ckpt = _CKPT_CACHE.get(key)
-    if ckpt is None:
-        ckpt = tempfile.mkdtemp(prefix="state_read_join_ckpt_")
-        src = split_events_dir_ntile(spark, sf_dir)
-        schema = spark.read.parquet(src).schema
-        ev = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
+    def build(ckpt: str) -> None:
+        ev = read_slices(spark, split_events_dir_ntile(spark, sf_dir))
         views = ev.filter(F.col("event_type") == "view").withWatermark("ts", "1 hour")
         purchases = ev.filter(F.col("event_type") == "purchase").withWatermark(
             "ts", "1 hour"
         )
-        out = view_purchase_pairs(views, purchases)
         run_stream_to_memory(
-            out,
+            view_purchase_pairs(views, purchases),
             "state_read_join_src",
             output_mode="append",
             partitions="4",
             checkpoint_location=ckpt,
         )
-        _CKPT_CACHE[key] = ckpt
-    return ckpt
+
+    return _checkpoint(spark, sf_dir, "join", build)
 
 
 # The retained-state rule of a watermarked interval join, restated in
@@ -254,54 +260,23 @@ def q_state_join_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------- state CHANGE FEED
 
 
-
-def _rocksdb_changelog_session(spark: SparkSession) -> SparkSession:
-    """Child session pinned to the RocksDB provider WITH changelog
-    checkpointing — the conf pair every changelog-consuming checkpoint
-    builder needs (change feed, per-shard snapshot restore); one
-    helper so a provider/conf rename is fixed once, not per builder."""
-    scoped = spark.newSession()
-    scoped.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    scoped.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb."
-        "changelogCheckpointing.enabled",
-        "true",
-    )
-    return scoped
-
-
 def changelog_checkpoint(spark: SparkSession, sf_dir: str) -> str:
     """Drive the tumbling agg over the EXACT-ntile 4-slice source with
     RocksDB changelog checkpointing on, so the per-batch state deltas
     (PUTs) are replayable as a change feed."""
-    from .incremental import split_events_dir_ntile
 
-    key = (spark.sparkContext.applicationId, sf_dir, "changelog")
-    ckpt = _CKPT_CACHE.get(key)
-    if ckpt is None:
-        ckpt = tempfile.mkdtemp(prefix="state_read_cdf_ckpt_")
-        scoped = _rocksdb_changelog_session(spark)
-        src = split_events_dir_ntile(scoped, sf_dir)
-        schema = scoped.read.parquet(src).schema
-        ev = (
-            scoped.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        agg = tumbling_counts(ev.withWatermark("ts", "1 hour"))
+    def build(ckpt: str) -> None:
+        scoped = rocksdb_session(spark)
+        ev = read_slices(scoped, split_events_dir_ntile(scoped, sf_dir))
         run_stream_to_memory(
-            agg,
+            tumbling_counts(ev.withWatermark("ts", "1 hour")),
             "state_read_cdf_src",
             output_mode="complete",
             partitions="4",
             checkpoint_location=ckpt,
         )
-        _CKPT_CACHE[key] = ckpt
-    return ckpt
+
+    return _checkpoint(spark, sf_dir, "cdf", build)
 
 
 # The change feed restated in SQL: micro-batch k holds exactly the rows
@@ -373,50 +348,31 @@ def q_state_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tws_checkpoint(spark: SparkSession, sf_dir: str) -> str:
     """Drive the typed-state engagement processor (ValueState totals +
     MapState per-type counts) over the ts-ordered ntile split to
-    completion against an explicit checkpoint dir."""
+    completion against an explicit checkpoint dir.
+
+    A fresh RocksDB session, not the family's shared one, so row
+    tracking stays on. Commits append changelogs instead of uploading
+    full snapshots (~10x less per-commit work,
+    scripts/tws_commit_metrics.py); the statestore/state-metadata
+    readers replay changelogs from the empty store, including the
+    batchId=1 time-travel read q_state_reshard does — same mechanics
+    changelog_checkpoint has always exercised."""
     from ..vendorpath import ensure_protobuf
-    from .incremental import split_events_dir_ntile
     from .stateful import user_engagement_tws
 
-    key = (spark.sparkContext.applicationId, sf_dir, "tws")
-    ckpt = _CKPT_CACHE.get(key)
-    if ckpt is None:
+    def build(ckpt: str) -> None:
         ensure_protobuf(spark)
-        ckpt = tempfile.mkdtemp(prefix="state_read_tws_ckpt_")
-        scoped = spark.newSession()
-        scoped.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        # commits append changelogs instead of uploading full snapshots
-        # (~10x less per-commit work, scripts/tws_commit_metrics.py);
-        # the statestore/state-metadata readers replay changelogs from
-        # the empty store, including the batchId=1 time-travel read
-        # q_state_reshard does — same mechanics changelog_checkpoint
-        # (below) has always exercised.
-        scoped.conf.set(
-            "spark.sql.streaming.stateStore.rocksdb."
-            "changelogCheckpointing.enabled",
-            "true",
-        )
-        src = split_events_dir_ntile(scoped, sf_dir)
-        schema = scoped.read.parquet(src).schema
-        ev = (
-            scoped.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        out = user_engagement_tws(ev)
+        scoped = rocksdb_session(spark)
+        ev = read_slices(scoped, split_events_dir_ntile(scoped, sf_dir))
         run_stream_to_memory(
-            out,
+            user_engagement_tws(ev),
             "state_read_tws_src",
             output_mode="update",
             partitions="8",
             checkpoint_location=ckpt,
         )
-        _CKPT_CACHE[key] = ckpt
-    return ckpt
+
+    return _checkpoint(spark, sf_dir, "tws", build)
 
 
 # Each named state VARIABLE of a finished typed-state query read back
@@ -581,11 +537,11 @@ def q_state_reshard(spark: SparkSession, sf_dir: str) -> DataFrame:
     slices 3-4, with n_seeded pinning the migrated half exactly — a
     state row lost in migration, a key double-seeded, or a partition
     dropped at the new count all flip the hash."""
-    from .incremental import split_events_dir_ntile
     from .stateful import (
         TWS_INIT_OUTPUT_SCHEMA,
         WarmStartProcessor,
         _tws_scoped_session,
+        keep_latest_per_user,
     )
 
     cache_key = (spark.sparkContext.applicationId, sf_dir, "reshard")
@@ -611,11 +567,8 @@ def q_state_reshard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
     )
     src = split_events_dir_ntile(scoped, sf_dir)
-    schema = scoped.read.parquet(f"{src}/slice-01.parquet").schema
     tail = (
-        scoped.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{src}/slice-0[34].parquet")
+        read_slices(scoped, src, "slice-0[34].parquet")
         # guide §4/§2.3: WarmStart folds value only
         .select("user_id", "value")
     )
@@ -636,8 +589,6 @@ def q_state_reshard(spark: SparkSession, sf_dir: str) -> DataFrame:
         partitions="16",
         checkpoint_location=new_ckpt,
     )
-    from .stateful import keep_latest_per_user
-
     # hash-PIN the re-shard itself: the continuation checkpoint's own
     # state-metadata must say 16 shards (vs the source checkpoint's 8).
     # Without this the "at a different partition count" claim is only
@@ -706,26 +657,16 @@ def snapshot_checkpoint(spark: SparkSession, sf_dir: str) -> str:
     import glob
     import time
 
-    from .incremental import split_events_dir_ntile
-
-    key = (spark.sparkContext.applicationId, sf_dir, "snapshot")
-    ckpt = _CKPT_CACHE.get(key)
-    if ckpt is None:
-        ckpt = tempfile.mkdtemp(prefix="state_read_snap_ckpt_")
-        scoped = _rocksdb_changelog_session(spark)
+    def build(ckpt: str) -> None:
+        scoped = rocksdb_session(spark)
         # queue a snapshot on EVERY commit (the maintenance tick then
         # uploads whichever version is queued when it fires)
         scoped.conf.set("spark.sql.streaming.stateStore.minDeltasForSnapshot", "1")
         scoped.conf.set("spark.sql.shuffle.partitions", str(_SNAP_SHARDS))
         src = split_events_dir_ntile(scoped, sf_dir)
-        schema = scoped.read.parquet(src).schema
 
-        def run_phase(path_glob: str, hold_for_zip: int | None) -> None:
-            ev = (
-                scoped.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(path_glob)
-            )
+        def run_phase(files: str, hold_for_zip: int | None) -> None:
+            ev = read_slices(scoped, src, files)
             agg = tumbling_counts(ev.withWatermark("ts", "1 hour"))
             q = (
                 agg.writeStream.outputMode("complete")
@@ -745,7 +686,7 @@ def snapshot_checkpoint(spark: SparkSession, sf_dir: str) -> str:
                 # the FIRST state-store query in the process
                 # (session.py pins 2s; a cold driver session that ran
                 # other streams first keeps the 60s default — hence
-                # the 150s deadline, paid once then _CKPT_CACHEd).
+                # the 150s deadline, paid once then cached).
                 deadline = time.monotonic() + 150
                 have: set[str] = set()
                 while time.monotonic() < deadline:
@@ -766,23 +707,15 @@ def snapshot_checkpoint(spark: SparkSession, sf_dir: str) -> str:
             finally:
                 q.stop()
 
-        try:
-            # phase 1: slices 1-2 only -> versions 1-2; await 2.zip on
-            # every shard
-            run_phase(f"{src}/slice-0[12].parquet", hold_for_zip=2)
-            # phase 2: widen the glob; slices 3-4 arrive as new files ->
-            # versions 3-4 (changelog commits; their snapshots are
-            # irrelevant). Complete-mode final state == full rollup.
-            run_phase(f"{src}/slice-0*.parquet", hold_for_zip=None)
-        except BaseException:
-            # an uncached partial checkpoint would orphan multi-GB
-            # RocksDB state dirs across bench/sweep retries, and every
-            # retry would re-pay the full two-phase build from a dirty
-            # base — clear it so the next attempt starts clean
-            shutil.rmtree(ckpt, ignore_errors=True)
-            raise
-        _CKPT_CACHE[key] = ckpt
-    return ckpt
+        # phase 1: slices 1-2 only -> versions 1-2; await 2.zip on
+        # every shard
+        run_phase("slice-0[12].parquet", hold_for_zip=2)
+        # phase 2: widen the glob; slices 3-4 arrive as new files ->
+        # versions 3-4 (changelog commits; their snapshots are
+        # irrelevant). Complete-mode final state == full rollup.
+        run_phase("slice-0*.parquet", hold_for_zip=None)
+
+    return _checkpoint(spark, sf_dir, "snap", build)
 
 
 @query(
@@ -893,50 +826,39 @@ def list_timer_checkpoint(spark: SparkSession, sf_dir: str) -> str:
     run_stream_to_memory)."""
     from pyspark.sql.types import LongType, StructField, StructType
 
-    from .incremental import split_events_dir_ntile
     from .stateful import _tws_scoped_session
 
-    key = (spark.sparkContext.applicationId, sf_dir, "listtimer")
-    ckpt = _CKPT_CACHE.get(key)
-    if ckpt is not None:
-        return ckpt
+    def build(ckpt: str) -> None:
+        scoped = _tws_scoped_session(spark)
+        ev = (
+            read_slices(scoped, split_events_dir_ntile(scoped, sf_dir))
+            .withWatermark("ts", "0 seconds")
+            # guide §4/§2.3: the processor folds value only; ts stays for
+            # the EventTime watermark, but event_id/event_type/props need
+            # not cross the exchange or the Python boundary
+            .select("user_id", "ts", "value")
+        )
+        out = ev.groupBy("user_id").transformWithStateInPandas(
+            statefulProcessor=ListTimerProcessor(),
+            outputStructType=StructType(
+                [StructField("user_id", LongType()), StructField("n", LongType())]
+            ),
+            outputMode="Update",
+            timeMode="EventTime",
+        )
+        run_stream_to_memory(
+            out,
+            "state_read_listtimer_src",
+            output_mode="update",
+            partitions="8",
+            checkpoint_location=ckpt,
+        )
+        # the readers open the CHECKPOINT, never this sink — drop the
+        # view so the shared family session's catalog really is empty
+        # between runs (the contract _tws_scoped_session documents)
+        scoped.catalog.dropTempView("state_read_listtimer_src")
 
-    out_schema = StructType(
-        [StructField("user_id", LongType()), StructField("n", LongType())]
-    )
-    scoped = _tws_scoped_session(spark)
-    ckpt = tempfile.mkdtemp(prefix="state_read_listtimer_ckpt_")
-    src = split_events_dir_ntile(scoped, sf_dir)
-    schema = scoped.read.parquet(src).schema
-    ev = (
-        scoped.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .withWatermark("ts", "0 seconds")
-        # guide §4/§2.3: the processor folds value only; ts stays for
-        # the EventTime watermark, but event_id/event_type/props need
-        # not cross the exchange or the Python boundary
-        .select("user_id", "ts", "value")
-    )
-    out = ev.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=ListTimerProcessor(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="EventTime",
-    )
-    run_stream_to_memory(
-        out,
-        "state_read_listtimer_src",
-        output_mode="update",
-        partitions="8",
-        checkpoint_location=ckpt,
-    )
-    # the readers open the CHECKPOINT, never this sink — drop the view
-    # so the shared family session's catalog really is empty between
-    # runs (the contract _tws_scoped_session documents)
-    scoped.catalog.dropTempView("state_read_listtimer_src")
-    _CKPT_CACHE[key] = ckpt
-    return ckpt
+    return _checkpoint(spark, sf_dir, "listtimer", build)
 
 
 # Every ListState element is one micro-batch's fold for one user, and

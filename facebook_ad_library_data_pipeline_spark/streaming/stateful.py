@@ -1,12 +1,25 @@
-"""Custom stateful streaming operator via applyInPandasWithState —
-the escape hatch for operators Spark's built-in streaming aggregations
-can't express (north-star "custom stateful operators").
+"""Keyed-state streaming operators: both of Spark's Python keyed-state
+APIs, each driven as a real stream over a bounded source and
+hash-checked against a relational oracle (north-star "custom stateful
+operators" — the escape hatch for what built-in streaming aggregations
+can't express).
 
-Demonstrated op: per-user running engagement state (event count, value
-sum, last event type) maintained in explicit GroupState across
-micro-batches, emitted in update mode. On the bounded test source one
-micro-batch ⇒ output equals the batch groupBy twin (asserted in
-tests/test_streaming.py).
+- applyInPandasWithState, one untyped state tuple per key:
+  q_stream_stateful_user (per-user running engagement) and
+  q_stream_group_timeout (GroupState event-time timeouts closing
+  sessions).
+- transformWithStateInPandas, the Spark 4 successor (StatefulProcessor
+  with named, typed ValueState/ListState/MapState, TTL and timers):
+  q_stream_transform_with_state and the q_stream_tws_* queries.
+
+The queries share one set of helpers for the scaffolding around the
+operator: ``incremental.read_slices`` streams a split source one file
+per micro-batch; ``_tws_scoped_session`` (on ``events.rocksdb_session``)
+is the typed-state family's RocksDB session; ``run_tws`` drains a
+typed-state stream at ``tws_partitions`` and snaps its sink;
+``rows_folded`` is the drain fixpoint of the operators that never
+self-quiesce; ``keep_latest_per_user`` keeps each user's final
+update-mode emit.
 """
 
 from __future__ import annotations
@@ -39,7 +52,7 @@ from pyspark.sql.types import (
 
 from ..registry import query
 from ..session import env_bool
-from .events import load_events_stream, run_stream_to_memory
+from .events import load_events_stream, rocksdb_session, run_stream_to_memory
 
 
 class _RowEmitter:
@@ -343,35 +356,19 @@ def q_stream_group_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     mid-stream for a one-batch-quiet user just splits that user into
     two sessions. A timeout that never fires still drops rows (the
     open session never emits) and reddens the hash."""
-    from .incremental import split_events_dir_ts_ordered
+    from .incremental import read_slices, split_events_dir_ts_ordered
 
     scoped = spark.newSession()
     src = split_events_dir_ts_ordered(scoped, sf_dir)
-    schema = scoped.read.parquet(src).schema
-    events = (
-        scoped.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .withWatermark("ts", "0 seconds")
-    )
-    out = user_timeout_stream(events)
-    total = scoped.read.parquet(src).filter(F.col("user_id") >= 0).count()
-
-    def all_sessions_closed() -> bool:
-        # dedup by (user, session) first: idempotent under a replayed
-        # batch re-appending a session row
-        got = scoped.sql(
-            "SELECT coalesce(sum(n), 0) FROM (SELECT max(n_events) AS n "
-            "FROM stream_group_timeout_out GROUP BY user_id, session_id)"
-        ).collect()[0][0]
-        return got == total
-
+    out = user_timeout_stream(read_slices(scoped, src).withWatermark("ts", "0 seconds"))
+    sink = "stream_group_timeout_out"
     run_stream_to_memory(
         out,
-        "stream_group_timeout_out",
+        sink,
         output_mode="update",
         partitions="8",
-        drained=all_sessions_closed,
+        # every real row sits in exactly one closed (user, session)
+        drained=rows_folded(scoped, src, sink, keys="user_id, session_id"),
     )
     sessions = (
         scoped.table("stream_group_timeout_out")
@@ -574,16 +571,6 @@ def _tws_scoped_session(spark: SparkSession) -> SparkSession:
     if scoped is None:
         changelog = env_bool("SPARK_GRAFT_TWS_CHANGELOG", "true")
         ensure_protobuf(spark)
-        scoped = spark.newSession()
-        scoped.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        scoped.conf.set(
-            "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
-            "false",
-        )
         # Changelog checkpointing: commit = append a small changelog
         # instead of flush+checkpoint+upload a full RocksDB snapshot
         # (snapshots move to the background maintenance task). Measured
@@ -595,10 +582,14 @@ def _tws_scoped_session(spark: SparkSession) -> SparkSession:
         # This is also the production posture for state-heavy streams
         # (snapshot upload off the per-batch critical path). Env
         # override for A/B re-measure.
+        scoped = rocksdb_session(spark)
         scoped.conf.set(
-            "spark.sql.streaming.stateStore.rocksdb."
-            "changelogCheckpointing.enabled",
+            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
             changelog,
+        )
+        scoped.conf.set(
+            "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
+            "false",
         )
         _TWS_SESSION_CACHE[key] = scoped
     else:
@@ -649,6 +640,47 @@ def tws_partitions(spark: SparkSession) -> str:
     return str(min(slots, _TWS_MAX_PARTITIONS))
 
 
+def run_tws(scoped: SparkSession, out: DataFrame, name: str, drained=None) -> DataFrame:
+    """Drain a typed-state stream into the update-mode memory sink
+    ``name`` at ``tws_partitions`` and return the snapped sink
+    (``_snap_sink``). ``drained`` is the fixpoint for operators that
+    never self-quiesce (see ``rows_folded``); without it the bounded
+    run ends at processAllAvailable."""
+    run_stream_to_memory(
+        out,
+        name,
+        output_mode="update",
+        partitions=tws_partitions(scoped),
+        drained=drained,
+    )
+    return _snap_sink(scoped, name)
+
+
+def rows_folded(spark: SparkSession, src: str, sink: str, keys: str = "user_id"):
+    """Drain predicate: true once the per-``keys`` max ``n_events`` in
+    the memory sink ``sink`` sums to the row count of the split source
+    ``src`` (its sentinel row excluded, null-safe).
+
+    For operators whose query never self-quiesces on a bounded source:
+    ProcessingTime TTL and timers ask the engine for a batch every
+    batch, and event-time timeouts emit only as the watermark passes.
+    A key's emits carry a growing ``n_events``, so the max per key is
+    its latest fold, and a replayed batch's duplicate sink row cannot
+    push the sum past the total (the fixpoint would never be hit)."""
+    from .incremental import SENTINEL_USER_ID
+
+    total = (
+        spark.read.parquet(src)
+        .filter(~F.col("user_id").eqNullSafe(SENTINEL_USER_ID))
+        .count()
+    )
+    sql = (
+        "SELECT coalesce(sum(n), 0) FROM (SELECT max(n_events) AS n "
+        f"FROM {sink} GROUP BY {keys})"
+    )
+    return lambda: spark.sql(sql).collect()[0][0] == total
+
+
 def q_stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user engagement via transformWithStateInPandas — the Spark 4
     typed-state successor API (named ValueState + MapState variables,
@@ -665,22 +697,14 @@ def q_stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame
     bootstrap and its pandas-UDF daemons are already warm (the
     typed-state worker factory spawns fresh)."""
     scoped = _tws_scoped_session(spark)
-    events = load_events_stream(scoped, sf_dir)
-    out = user_engagement_tws(events)
+    out = user_engagement_tws(load_events_stream(scoped, sf_dir))
     # One task wave for the WHOLE tws family (see tws_partitions).
     # Measured on a 4-vCPU VM (local[4], sf0.01, perfbench stream_state,
     # 10 alternating pairs): 16 -> 4 partitions took the warm pass from
     # a median 7.7 s to 5.0 s; in the traced warm pass tasks fell
     # 35 -> 23 and summed state-store commit time 4.2-4.6 -> 1.3-1.5 s.
     # The cap of 16 is the knee the local[32] sweeps found at sf0.1.
-    run_stream_to_memory(
-        out,
-        "stream_tws_out",
-        output_mode="update",
-        partitions=tws_partitions(scoped),
-    )
-    latest = _snap_sink(scoped, "stream_tws_out")
-    return keep_latest_per_user(latest)
+    return keep_latest_per_user(run_tws(scoped, out, "stream_tws_out"))
 
 
 # ----------------------------------- ListState + TTL over real micro-batches
@@ -792,39 +816,14 @@ def q_stream_tws_list_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     strictly increasing, since a user absent from a batch emits
     nothing) carries the complete history and must hash-match the
     whole-table oracle. RocksDB provider, as the production backend."""
-    from .incremental import split_events_dir
+    from .incremental import read_slices, split_events_dir
+
     scoped = _tws_scoped_session(spark)
     src = split_events_dir(scoped, sf_dir)
-    schema = scoped.read.parquet(src).schema
-    events = (
-        scoped.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    out = user_value_history_tws(events)
-    # ProcessingTime time mode (TTL's clock) makes the operator request
-    # a batch every batch — the bounded query never self-quiesces, so
-    # drain on an observable fixpoint instead: every source row folded
-    # == the per-user max n_events emitted in the sink sums to the
-    # source row count (n_events is strictly increasing per emit).
-    total = scoped.read.parquet(src).count()
-
-    def all_rows_folded() -> bool:
-        got = scoped.sql(
-            "SELECT coalesce(sum(n), 0) FROM (SELECT max(n_events) AS n "
-            "FROM stream_tws_list_out GROUP BY user_id)"
-        ).collect()[0][0]
-        return got == total
-
-    run_stream_to_memory(
-        out,
-        "stream_tws_list_out",
-        output_mode="update",
-        partitions=tws_partitions(scoped),
-        drained=all_rows_folded,
-    )
-    latest = _snap_sink(scoped, "stream_tws_list_out")
-    return keep_latest_per_user(latest)
+    out = user_value_history_tws(read_slices(scoped, src))
+    # ProcessingTime time mode (TTL's clock): drain on rows_folded
+    sink = "stream_tws_list_out"
+    return keep_latest_per_user(run_tws(scoped, out, sink, rows_folded(scoped, src, sink)))
 
 
 # ------------------------------------------- timers (register/fire/delete)
@@ -932,34 +931,13 @@ def q_stream_tws_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
     end-of-source, which makes the final fire's content exact). Every
     output row came out of handleExpiredTimer; per user the kept row
     (max n_events) must hash-match the whole-table aggregate."""
-    from .incremental import split_events_dir
+    from .incremental import read_slices, split_events_dir
+
     scoped = _tws_scoped_session(spark)
     src = split_events_dir(scoped, sf_dir)
-    schema = scoped.read.parquet(src).schema
-    events = (
-        scoped.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    out = user_timer_finalize_tws(events)
-    total = scoped.read.parquet(src).count()
-
-    def all_rows_finalized() -> bool:
-        got = scoped.sql(
-            "SELECT coalesce(sum(n), 0) FROM (SELECT max(n_events) AS n "
-            "FROM stream_tws_timer_out GROUP BY user_id)"
-        ).collect()[0][0]
-        return got == total
-
-    run_stream_to_memory(
-        out,
-        "stream_tws_timer_out",
-        output_mode="update",
-        partitions=tws_partitions(scoped),
-        drained=all_rows_finalized,
-    )
-    latest = _snap_sink(scoped, "stream_tws_timer_out")
-    return keep_latest_per_user(latest)
+    out = user_timer_finalize_tws(read_slices(scoped, src))
+    sink = "stream_tws_timer_out"
+    return keep_latest_per_user(run_tws(scoped, out, sink, rows_folded(scoped, src, sink)))
 
 
 # --------------------- event-time timers (watermark-driven window close)
@@ -1134,44 +1112,18 @@ def q_stream_tws_event_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy twin. The sentinel row (user_id -1) exists only in the
     derived split source, never in `events`, and emits nothing: its
     own window's end sits past the final watermark."""
-    from .incremental import split_events_dir_ts_ordered
+    from .incremental import read_slices, split_events_dir_ts_ordered
+
     scoped = _tws_scoped_session(spark)
     src = split_events_dir_ts_ordered(scoped, sf_dir)
-    schema = scoped.read.parquet(src).schema
-    events = (
-        scoped.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .withWatermark("ts", "0 seconds")
-    )
-    out = user_window_close_tws(events)
-    total = (
-        scoped.read.parquet(src).filter(F.col("user_id") >= 0).count()
-    )
-
-    def all_windows_closed() -> bool:
-        # max-per-window before summing: idempotent under a replayed
-        # batch re-appending a window's row (a raw sum would overshoot
-        # `total` and the == fixpoint would never be reached)
-        got = scoped.sql(
-            "SELECT coalesce(sum(n), 0) FROM ("
-            "  SELECT max(n_events) AS n FROM stream_tws_event_timer_out"
-            "  GROUP BY user_id, window_start)"
-        ).collect()[0][0]
-        return got == total
-
-    run_stream_to_memory(
-        out,
-        "stream_tws_event_timer_out",
-        output_mode="update",
-        partitions=tws_partitions(scoped),
-        drained=all_windows_closed,
-    )
+    out = user_window_close_tws(read_slices(scoped, src).withWatermark("ts", "0 seconds"))
+    sink = "stream_tws_event_timer_out"
+    drained = rows_folded(scoped, src, sink, keys="user_id, window_start")
     # each window fires exactly once, so this grouping is a no-op on a
     # clean run — it exists to absorb a replayed batch's duplicate
     # append (same replay discipline as the keep-max tws queries)
     return (
-        _snap_sink(scoped, "stream_tws_event_timer_out")
+        run_tws(scoped, out, sink, drained)
         .groupBy("user_id", "window_start")
         .agg(
             F.max("n_events").alias("n_events"),
@@ -1270,8 +1222,9 @@ def q_stream_tws_initial_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal the whole-table aggregate — backfill + stream with no gap and
     no double count — which is exactly what a production cutover from
     batch history to live ingestion has to guarantee."""
-    from .incremental import split_events_dir
     from ..catalog import load_table
+    from .incremental import read_slices, split_events_dir
+
     scoped = _tws_scoped_session(spark)
     backfill = (
         load_table(scoped, sf_dir, "events")
@@ -1285,12 +1238,8 @@ def q_stream_tws_initial_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("user_id")
     )
-    src = split_events_dir(scoped, sf_dir)
-    schema = scoped.read.parquet(src).schema
     events = (
-        scoped.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+        read_slices(scoped, split_events_dir(scoped, sf_dir))
         .filter(F.col("event_id") % 2 == 1)
         # projection discipline: see user_engagement_tws (the filter
         # column is consumed JVM-side, the processor folds value only)
@@ -1303,14 +1252,7 @@ def q_stream_tws_initial_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         timeMode="None",
         initialState=backfill,
     )
-    run_stream_to_memory(
-        out,
-        "stream_tws_init_out",
-        output_mode="update",
-        partitions=tws_partitions(scoped),
-    )
-    latest = _snap_sink(scoped, "stream_tws_init_out")
-    return keep_latest_per_user(latest)
+    return keep_latest_per_user(run_tws(scoped, out, "stream_tws_init_out"))
 
 
 # ------------------------- MapState iteration + removeKey (state spill)
@@ -1463,24 +1405,11 @@ def q_stream_tws_map_spill(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-match the whole-table aggregate; total_value is conserved
     across spills by construction, so any protocol fault in
     values()/keys()/removeKey shows up as a red hash."""
-    from .incremental import split_events_dir
+    from .incremental import read_slices, split_events_dir
+
     scoped = _tws_scoped_session(spark)
-    src = split_events_dir(scoped, sf_dir)
-    schema = scoped.read.parquet(src).schema
-    events = (
-        scoped.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    out = user_spill_map_tws(events)
-    run_stream_to_memory(
-        out,
-        "stream_tws_spill_out",
-        output_mode="update",
-        partitions=tws_partitions(scoped),
-    )
-    latest = _snap_sink(scoped, "stream_tws_spill_out")
-    return keep_latest_per_user(latest)
+    out = user_spill_map_tws(read_slices(scoped, split_events_dir(scoped, sf_dir)))
+    return keep_latest_per_user(run_tws(scoped, out, "stream_tws_spill_out"))
 
 
 # ------------------------- bounded per-key reservoir (bottom-k sketch)
@@ -1653,25 +1582,11 @@ def q_stream_tws_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     a distinct-count sketch). Order-independence of the bottom-k set
     is what makes an exact oracle possible at all — a coin-flip
     reservoir could only be invariant-checked."""
-    from .incremental import split_events_dir
+    from .incremental import read_slices, split_events_dir
 
     scoped = _tws_scoped_session(spark)
-    src = split_events_dir(scoped, sf_dir)
-    schema = scoped.read.parquet(src).schema
-    events = (
-        scoped.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    out = bounded_reservoir_tws(events)
-    run_stream_to_memory(
-        out,
-        "stream_tws_res_out",
-        output_mode="update",
-        partitions=tws_partitions(scoped),
-    )
-    latest = _snap_sink(scoped, "stream_tws_res_out")
-    return keep_latest_per_user(latest)
+    out = bounded_reservoir_tws(read_slices(scoped, split_events_dir(scoped, sf_dir)))
+    return keep_latest_per_user(run_tws(scoped, out, "stream_tws_res_out"))
 
 
 if tws_runtime_available():

@@ -82,7 +82,8 @@ def drive(spark, sf_dir: str, which: str) -> tuple[list[tuple[int, int]], int]:
     # user_id: the old API closes one session per (user, session) —
     # a multi-session user would make a user_id-only sum permanently
     # undercount the source and spin the poll to its deadline
-    # (mirrors q_stream_group_timeout's all_sessions_closed predicate).
+    # (mirrors the keys q_stream_group_timeout passes to
+    # stateful.rows_folded).
     group_key = "user_id, window_start" if which == "tws" else "user_id, session_id"
     emitted_target_sql = (
         f"SELECT coalesce(sum(n),0) FROM (SELECT max(n_events) AS n "
